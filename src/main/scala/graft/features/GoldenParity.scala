@@ -26,16 +26,29 @@ import org.apache.spark.sql.functions._
   * all map-side combined. */
 object GoldenParity {
   /** Reference checkout root — env-overridable (like SPARK_GRAFT_SF_DIR)
-    * so a host without /root/reference can still run the suite; the
-    * `dir` argument is deliberately unused (this query's input is the
-    * reference's fixed golden pair, so its cost is CONSTANT across SFs —
-    * per-SF bench totals include it as a fixed additive term). */
-  private def refRoot: String =
+    * so a host without the reference checkout can still run the suite.
+    * The one locator for the golden pair: the flagship queries,
+    * `SparkEntry.entry` and the golden specs all resolve it here. */
+  def refRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference")
 
+  /** Path of the golden file `name` (`01.parquet` or `02.parquet`) under
+    * [[refRoot]]; fails with one precondition message naming the path
+    * and the env var when the file is absent. */
+  def refFile(name: String): String = {
+    val p = s"$refRoot/$name"
+    require(new java.io.File(p).exists(),
+      s"reference golden file $p not found; set SPARK_GRAFT_REF_DIR to " +
+        "the directory holding 01.parquet and 02.parquet")
+    p
+  }
+
+  /** The `dir` argument is deliberately unused: this query's input is the
+    * reference's fixed golden pair, so its cost is CONSTANT across SFs —
+    * per-SF bench totals include it as a fixed additive term. */
   def census(spark: SparkSession, dir: String): DataFrame = {
-    val derived = Features(spark.read.parquet(s"$refRoot/01.parquet"))
-    val golden = spark.read.parquet(s"$refRoot/02.parquet")
+    val derived = Features(spark.read.parquet(refFile("01.parquet")))
+    val golden = spark.read.parquet(refFile("02.parquet"))
     // The two-way multiset diff runs on 64-bit row FINGERPRINTS
     // (xxhash64 over every column, golden column order on both sides):
     // identical diff-count semantics — a row is unmatched iff its
@@ -139,7 +152,7 @@ object GoldenParity {
     * 02.parquet (FIXTURES.md §1c), and dow6 is forced by the row total. */
   def fixedDowCensus(spark: SparkSession, dir: String): DataFrame = {
     val derived = Features(
-      spark.read.parquet(s"$refRoot/01.parquet"), bugCompat = false)
+      spark.read.parquet(refFile("01.parquet")), bugCompat = false)
     val dowSums = (0 until 7).map(d =>
       sum(col(s"Pickup_dow_is_$d")).cast("long").as(s"dow$d"))
     val aggCols = dowSums ++ Seq(

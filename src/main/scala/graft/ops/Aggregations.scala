@@ -192,54 +192,30 @@ object Aggregations {
     // agg sees only pre-deduped values, 6 sketch buffers total). Same
     // 100 TB shape: dedup-first is the standard rewrite when
     // value-cardinality ≪ row count.
-    // r20 A/B (r19 VERDICT task 2b): profiling split the 0.77 s wall
-    // into ~0.6 distinct-exchange + ~0.5 HLL register updates (the
-    // exact-only control measured 0.89 vs 1.36 in-shell). Two constant
-    // cuts survive the A/B: (1) `stack` generates the (tag, value)
-    // pairs without the array-of-structs materialization the explode
-    // arm paid; (2) the sketch/count aggregate groups by (flag, tag) so
-    // every row updates exactly ONE unconditional HLL instead of
+    // Two constant cuts over the plain explode: (1) `stack` generates
+    // the (tag, value) pairs without an array-of-structs
+    // materialization; (2) the sketch/count aggregate groups by (flag,
+    // tag) so every row updates exactly ONE unconditional HLL instead of
     // evaluating two `when` guards per row — the 6-row by-tag frame
     // then folds to the 3-row wide shape in a free post-exchange
-    // aggregate. SPARK_GRAFT_AB_AD=legacy keeps the r18 explode+
-    // conditional-sketch arm re-measurable (BENCH_NOTES r20).
-    if (sys.env.get("SPARK_GRAFT_AB_AD").contains("legacy")) {
-      val pairs = li.select(col("l_returnflag"), explode(array(
-          struct(lit("o").as("t"), col("l_orderkey").as("v")),
-          struct(lit("p").as("t"), col("l_partkey").as("v")))).as("tv"))
-        .select(col("l_returnflag"), col("tv.t").as("t"), col("tv.v").as("v"))
-        .distinct()
-      pairs.groupBy(col("l_returnflag"))
-        .agg(
-          count(when(col("t") === "o", 1)).as("exact_orders"),
-          count(when(col("t") === "p", 1)).as("exact_parts"),
-          approx_count_distinct(when(col("t") === "o", col("v")), 0.02).as("ao"),
-          approx_count_distinct(when(col("t") === "p", col("v")), 0.02).as("ap"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
-            col("exact_orders") <= 0.10).as("orders_ok"),
-          (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
-            col("exact_parts") <= 0.10).as("parts_ok"))
-        .sortSmall(col("l_returnflag"))
-    } else {
-      val pairs = li.selectExpr("l_returnflag",
-          "stack(2, 'o', l_orderkey, 'p', l_partkey) as (t, v)")
-        .distinct()
-      val byTag = pairs.groupBy(col("l_returnflag"), col("t"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(col("v"), 0.02).as("a"))
-      byTag.groupBy(col("l_returnflag"))
-        .agg(max(when(col("t") === "o", col("n"))).as("exact_orders"),
-          max(when(col("t") === "p", col("n"))).as("exact_parts"),
-          max(when(col("t") === "o", col("a"))).as("ao"),
-          max(when(col("t") === "p", col("a"))).as("ap"))
-        .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
-          (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
-            col("exact_orders") <= 0.10).as("orders_ok"),
-          (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
-            col("exact_parts") <= 0.10).as("parts_ok"))
-        .sortSmall(col("l_returnflag"))
-    }
+    // aggregate.
+    val pairs = li.selectExpr("l_returnflag",
+        "stack(2, 'o', l_orderkey, 'p', l_partkey) as (t, v)")
+      .distinct()
+    val byTag = pairs.groupBy(col("l_returnflag"), col("t"))
+      .agg(count(lit(1)).as("n"),
+        approx_count_distinct(col("v"), 0.02).as("a"))
+    byTag.groupBy(col("l_returnflag"))
+      .agg(max(when(col("t") === "o", col("n"))).as("exact_orders"),
+        max(when(col("t") === "p", col("n"))).as("exact_parts"),
+        max(when(col("t") === "o", col("a"))).as("ao"),
+        max(when(col("t") === "p", col("a"))).as("ap"))
+      .select(col("l_returnflag"), col("exact_orders"), col("exact_parts"),
+        (abs(col("ao") - col("exact_orders")).cast(DoubleType) /
+          col("exact_orders") <= 0.10).as("orders_ok"),
+        (abs(col("ap") - col("exact_parts")).cast(DoubleType) /
+          col("exact_parts") <= 0.10).as("parts_ok"))
+      .sortSmall(col("l_returnflag"))
   }
 
   val approxDistinctSql: String =

@@ -17,12 +17,11 @@ import org.apache.spark.sql.functions._
   * Scale posture: each round is one equi-join of the edge table against
   * the (node-cardinality) rank table + one map-side-combined aggregate —
   * the standard distributed PageRank step. The rank join is SHUFFLE-HASH
-  * (r17: the node-sized rank exchange is cheap, the persisted edge
-  * frame's exchange is one reused subtree across rounds, and the
-  * per-round broadcast build jobs re-executed prior rounds' chains —
-  * 40% off the entry locally AND the posture that survives a rank table
-  * too big to broadcast; `SPARK_GRAFT_PR_BROADCAST=on` re-measures the
-  * broadcast arm). Unrolling is
+  * (the node-sized rank exchange is cheap, the persisted edge frame's
+  * exchange is one reused subtree across rounds, and per-round
+  * broadcast build jobs would re-execute prior rounds' chains — also
+  * the posture that survives a rank table too big to broadcast).
+  * Unrolling is
   * deliberate for a FIXED iteration count (no lineage growth to manage —
   * the iterative-loop machinery with localCheckpoint truncation lives in
   * [[Dedup.labelPropagationCC]]); a convergence-driven variant would add
@@ -67,20 +66,14 @@ object Graph {
     // it for free).
     val r0 = deg.select(col("src").as("node")).crossJoin(broadcast(nDf))
       .select(col("node"), expr(s"$Scale div nn").as("r"), col("nn"))
-    // Per-round rank join: DEFAULT is shuffle-hash (r17 — adopted at
-    // min-of-7 A/B 0.73 vs 1.22 s, jobs 6 → 3: each round's broadcast
-    // build job re-executed the prior rounds' chain, the same quadratic
-    // recompute the BFS rounds escaped in r15, while the shuffle-hash
-    // rank exchange is node-sized and the persisted edge frame's
-    // exchange is one reused subtree). Also the 100 TB posture: the
-    // rank table is node-cardinality and has no business broadcasting.
-    // SPARK_GRAFT_PR_BROADCAST=on keeps the broadcast arm re-measurable
-    // (value-identical — join strategy hints only).
-    val prBroadcast =
-      sys.env.get("SPARK_GRAFT_PR_BROADCAST").contains("on")
+    // Per-round rank join is shuffle-hash: a per-round broadcast build
+    // job would re-execute the prior rounds' chain, while the
+    // shuffle-hash rank exchange is node-sized and the persisted edge
+    // frame's exchange is one reused subtree. Also the 100 TB posture:
+    // the rank table is node-cardinality and has no business
+    // broadcasting.
     val rFinal = (1 to Rounds).foldLeft(r0) { (r, _) =>
-      val rr = if (prBroadcast) broadcast(r) else r.hint("shuffle_hash")
-      ed.join(rr, col("src") === col("node"))
+      ed.join(r.hint("shuffle_hash"), col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(expr("r div deg")).as("inc"), max(col("nn")).as("nn"))
         .select(col("dst").as("node"),
@@ -94,7 +87,7 @@ object Graph {
     // sort-sampling job). Both broadcasts are semantically forced by the
     // broadcast-join strategy, which is itself the measured winner for a
     // node-sized build side; the rank-join side stays shuffle-hash (the
-    // 100 TB posture — see the r17 A/B above).
+    // 100 TB posture — see above).
     rFinal.select(col("node"), col("r"))
       .orderBy(col("r").desc, col("node")).limit(20)
   }
@@ -422,53 +415,41 @@ object Graph {
   def linkPrediction(spark: SparkSession, dir: String): DataFrame = {
     val edges = cooccurrenceEdges(spark, dir)
     val adj = cappedAdjacency(spark, dir)
-    // r20 (guide §2.3/§3.3): the wedge generator is an IN-ARRAY pair
-    // expansion over the per-node neighbor list instead of the adj ⋈ adj
-    // self-equi-join. cappedAdjacency bounds every list at MaxNeighbors
-    // (= 30), so the collected array is constant-size — the same
-    // bounded-collect posture as the banding recount — and it rides the
-    // exchange the capping window already established (groupBy(a) over
-    // a-partitioned input adds no shuffle). The join arm materialized
-    // |N(a)|² rows per node and THEN filtered the l.b < r.b half; the
-    // sorted-array slice emits exactly the i<j half, with no join
-    // machinery (SMJ merge or hash probe) at all. Plan: 1 SMJ + filter →
-    // generate-over-aggregate, same two exchanges
-    // (plans/r20/graph_link_prediction_{before,after}.txt).
-    // SPARK_GRAFT_AB_LP=join keeps the self-join arm re-measurable
-    // (QBench min-of-7 at sf0.1: join 0.387/med 0.474 → array 0.334/med
-    // 0.392); GraphSpec pins arm parity.
-    val wedges = lpWedges(adj,
-      useJoin = sys.env.get("SPARK_GRAFT_AB_LP").contains("join"))
+    // The wedge generator is an IN-ARRAY pair expansion over the
+    // per-node neighbor list, not an adj ⋈ adj self-equi-join.
+    // cappedAdjacency bounds every list at MaxNeighbors (= 30), so the
+    // collected array is constant-size — the same bounded-collect
+    // posture as the banding recount — and it rides the exchange the
+    // capping window already established (groupBy(a) over a-partitioned
+    // input adds no shuffle). A self-join would materialize |N(a)|² rows
+    // per node and THEN filter the l.b < r.b half; the sorted-array
+    // slice emits exactly the i<j half, with no join machinery at all.
+    val wedges = lpWedges(adj)
     wedges.join(edges,
         wedges("u") === edges("a") && wedges("v") === edges("b"), "left_anti")
       .orderBy(col("common_neighbors").desc, col("u"), col("v"))
       .limit(20)
   }
 
-  /** Test seam: both wedge arms (r20 array expansion vs the legacy
-    * self-join) so GraphSpec can pin their parity in one JVM. */
-  private[ops] def lpWedges(adj: DataFrame, useJoin: Boolean): DataFrame =
-    if (useJoin)
-      adj.as("l").join(adj.as("r"), col("l.a") === col("r.a"))
-        .filter(col("l.b") < col("r.b"))
-        .groupBy(col("l.b").as("u"), col("r.b").as("v"))
-        .agg(count(lit(1)).as("common_neighbors"))
-    else
-      // DISTINCT-NEIGHBOR INVARIANT (r20 ADVICE): this arm equals the
-      // join arm's strict l.b < r.b only because adjacency lists are
-      // duplicate-free — `adj` derives from cooccurrenceEdges' groupBy
-      // (a, b) (and the MaxNeighbors window keeps one row per (a, b)), so
-      // collect_list never sees a repeated neighbor. A duplicated b would
-      // emit u == v self-pairs here that the join arm excludes; any new
-      // caller must feed a deduplicated adjacency or switch to
-      // collect_set.
-      adj.groupBy(col("a"))
-        .agg(sort_array(collect_list(col("b"))).as("ds"))
-        .filter(size(col("ds")) >= 2)
-        .select(col("ds"), posexplode(col("ds"))).toDF("ds", "i", "u")
-        .select(col("u"), explode(expr("slice(ds, i + 2, size(ds))")).as("v"))
-        .groupBy(col("u"), col("v"))
-        .agg(count(lit(1)).as("common_neighbors"))
+  /** Wedge census (u < v, common-neighbor count) over a capped
+    * adjacency. Exposed to the package so R20RewriteParitySpec can pin it
+    * against the self-join formulation.
+    *
+    * DISTINCT-NEIGHBOR INVARIANT: this equals the self-join's strict
+    * l.b < r.b only because adjacency lists are duplicate-free — `adj`
+    * derives from cooccurrenceEdges' groupBy (a, b) (and the
+    * MaxNeighbors window keeps one row per (a, b)), so collect_list never
+    * sees a repeated neighbor. A duplicated b would emit u == v
+    * self-pairs here that the join excludes; any new caller must feed a
+    * deduplicated adjacency or switch to collect_set. */
+  private[ops] def lpWedges(adj: DataFrame): DataFrame =
+    adj.groupBy(col("a"))
+      .agg(sort_array(collect_list(col("b"))).as("ds"))
+      .filter(size(col("ds")) >= 2)
+      .select(col("ds"), posexplode(col("ds"))).toDF("ds", "i", "u")
+      .select(col("u"), explode(expr("slice(ds, i + 2, size(ds))")).as("v"))
+      .groupBy(col("u"), col("v"))
+      .agg(count(lit(1)).as("common_neighbors"))
 
   val linkPredictionSql: String =
     s"""WITH ${coocEdgesSqlPrelude("edges")},
@@ -521,34 +502,18 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val d0 = ev.agg(concat(lit("u:"), min(col("user_id"))).as("node"))
       .select(col("node"), lit(0).as("dist"))
-    // SPARK_GRAFT_BFS_BROADCAST=on: the A/B arm (VERDICT r16 task 5) —
-    // broadcast the distance table into a map-side join instead of the
-    // shuffle-hash exchange, with a lazy localCheckpoint per round to
-    // truncate lineage (without it, round r's broadcast variable
-    // re-executes rounds 1..r-1's whole chain — the quadratic recompute
-    // that made the r15 broadcast shape lose). Value-identical by
-    // construction (same expand/union/min-combine per round). Kept off
-    // by default: the distance table converges to ALL nodes and the
-    // user partition scales with the corpus, so broadcasting it is not
-    // the 100 TB posture — at cluster scale AQE makes the
-    // small-frontier broadcast call adaptively per round instead.
-    // Measured min-of-5 A/B at sf0.1 in BENCH_NOTES r17.
-    val bfsBroadcast = sys.env.get("SPARK_GRAFT_BFS_BROADCAST").contains("on")
     val dFinal = (1 to BfsRounds).foldLeft(d0) { (d, _) =>
-      val dd = if (bfsBroadcast) broadcast(d) else d.hint("shuffle_hash")
-      val nxt = edges.join(dd, col("src") === col("node"))
+      val nxt = edges.join(d.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
       val merged =
         d.union(nxt).groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      // LAZY per-round persist (r20, the kcore shape): round r's frame
-      // has TWO consumers in round r+1 (the frontier-expand join AND the
-      // union), and exchange reuse does not cover both — the un-persisted
-      // fold re-evaluated each prior round's chain down both arms, rounds
-      // × floor in recompute. The persist stays lazy (no eager barrier,
-      // still ONE job); round r+1 reads the round-r cache instead of its
-      // lineage. Min-of-5 A/B at sf0.1: 1.13 → 0.73 s, identical rows.
-      if (bfsBroadcast) merged.localCheckpoint(false)
-      else merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // LAZY per-round persist: round r's frame has TWO consumers in
+      // round r+1 (the frontier-expand join AND the union), and exchange
+      // reuse does not cover both — an un-persisted fold re-evaluates
+      // each prior round's chain down both arms, rounds × floor in
+      // recompute. The persist stays lazy (no eager barrier, still ONE
+      // job); round r+1 reads the round-r cache instead of its lineage.
+      merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // Remaining jobs audit (r19 VERDICT task 6): listener-traced at
     // sf0.1 — job 1 is the events parquet footer/schema read (the nanos
@@ -604,19 +569,18 @@ object Graph {
     * point sf0.1 collapses to an empty core by round 3, sf0.01 cascades
     * 145→20 nodes, both oracle-reproduced).
     *
-    * Plan: each round is one windowed pass over the round-start edge
-    * set — both endpoint degrees (one sort-exchange per endpoint key)
-    * plus an rn=1 node marker riding the a-side exchange — so the
-    * per-round census is a no-exchange rollup of the same persisted
-    * frame, the peel filter (degrees ≥ k on BOTH endpoints, judged on
-    * the round-start set = the simultaneous peel) yields the next
-    * round, and the whole 5-round trajectory runs as ONE lazily-
-    * persisted job with no eager barriers and no data-dependent
-    * broadcast subtrees. k is the exact median degree, computed from
-    * the degree-domain HISTOGRAM (broadcast ≤-self-join cumulative, no
-    * single-partition window) and held as a driver scalar. At cluster
-    * scale the executor-loss-safe variant adds reliable checkpoint()
-    * at a 2-round cadence — same dataflow. */
+    * Plan: k is the exact median degree, read off the degree-domain
+    * HISTOGRAM by one single-partition running-count window pass and
+    * held as a driver scalar. Each round is then ONE map-side-combined
+    * degree aggregate over the round-start edge set; the census is a
+    * 1-row rollup of that degree table, and the peel keeps the edges
+    * whose endpoints both have degree ≥ k (judged on the round-start
+    * set = the simultaneous peel) through two shuffle-hash semi-joins.
+    * Round frames are lazy localCheckpoints, so the whole 5-round
+    * trajectory runs as ONE job with no eager barriers and no
+    * data-dependent broadcast subtrees. At cluster scale the
+    * executor-loss-safe variant adds reliable checkpoint() at a 2-round
+    * cadence — same dataflow. */
   def kcorePeel(spark: SparkSession, dir: String): DataFrame = {
     val e0 = cooccurrenceEdges(spark, dir)
     val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
@@ -624,24 +588,15 @@ object Graph {
     val d0 = und.groupBy(col("a")).agg(count(lit(1)).as("d"))
     // median-k via the DEGREE HISTOGRAM: the rank-(⌈n/2⌉) element of the
     // (d, a) total order has the same d as the smallest degree whose
-    // inclusive cumulative count reaches ⌈n/2⌉, and the histogram is
-    // degree-DOMAIN-sized (≪ nodes ≪ edges), so the cumulative rides a
-    // broadcast ≤-self-join — no single-partition window, no range
-    // repartition, no checkpoint barrier. The scalar k is collected to
-    // the driver (one bounded row, the same constant-size-collect shape
-    // as the Lloyd centroids in graft.ops.Similarity) so the rounds can
-    // filter on a literal instead of cross-joining a broadcast whose
-    // subtree every round would race to rebuild at plan-prepare time
-    // (all BroadcastExchanges in a plan launch concurrently; the
-    // all-lazy broadcast variant measured 17 s+ against ~2 s).
-    // r21: the cumulative rides ONE single-partition window pass instead
-    // of the broadcast ≤-self-join + broadcast half-scalar (two broadcast
-    // exchange jobs launched at plan-prepare, plus the persisted h). A
-    // partitionBy-less window IS a single-partition sort — acceptable
-    // here for the same reason the ≤-self-join was: the histogram is
-    // degree-DOMAIN-sized (≪ nodes ≪ edges) at any SF. Same exact
-    // rank-(⌈n/2⌉) semantics: inclusive running count vs (total+1) div 2.
-    // QBench A/B (with the round-body change below): jobs 12 → 2.
+    // inclusive cumulative count reaches ⌈n/2⌉ = (total + 1) div 2. The
+    // cumulative rides ONE single-partition window pass — a
+    // partitionBy-less window IS a single-partition sort, acceptable
+    // because the histogram is degree-DOMAIN-sized (≪ nodes ≪ edges) at
+    // any SF. The scalar k is collected to the driver (one bounded row,
+    // the same constant-size-collect shape as the Lloyd centroids in
+    // graft.ops.Similarity) so the rounds filter on a literal instead of
+    // cross-joining a broadcast whose subtree every round would race to
+    // rebuild at plan-prepare time.
     val wCum = Window.orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wTot = Window.partitionBy()
@@ -654,46 +609,21 @@ object Graph {
       .head()
     // empty graph ⇒ no median; any k yields the same all-zero census
     val k = if (kRow.isNullAt(0)) 0L else kRow.getLong(0)
-    // Round body: each windowed pass over the round-start edge set
-    // computes BOTH endpoint degrees (one sort-exchange per endpoint
-    // key) AND an rn=1 node marker riding the a-side exchange for free
-    // — so the per-round census is a no-exchange rollup of the SAME
-    // persisted frame (nodes = rn=1 rows, Σda = 2·edges, min(da) =
-    // min degree), and the peel filter (da ≥ k AND db ≥ k, round-start
-    // degrees on both endpoints = the simultaneous peel) yields the
-    // next round. Everything after the k-scalar collect is LAZY
-    // persists, so the whole 5-round trajectory runs as ONE job whose
-    // shuffle stages the scheduler dedups (unlike broadcast subtrees,
-    // which race). A/B history at sf0.1 (QBench mins): eager per-round
-    // checkpoints + separate census exchanges 5.3 s → lazy windows
-    // 3.9 s → this shape (census fused into the window pass, median-k
-    // as histogram + driver scalar); the agg+broadcast-semi-join round
-    // body is the 100 TB alternative when edges ≫ memory but nodes
-    // broadcast — same trajectory, keyed-exchange-free rounds.
     // Round body: ONE map-side-combined degree aggregate per round (the
     // node-sized `deg` table), from which BOTH the census (a 1-row
     // rollup: nodes = rows, Σd = 2·edges, min(d)) and the peel derive —
-    // survivors are the d ≥ k nodes, broadcast back onto the edge set as
-    // two node-keyed semi-joins (degrees judged on the round-start set =
-    // the simultaneous peel). This replaces the earlier windowed form
-    // (two full sort-exchanges of the edge set per round, to attach
-    // per-edge da/db/rn columns the census then mostly discarded): the
-    // degree domain is nodes ≪ edges, so the only per-round exchange is
-    // the combine-shrunk degree agg and the edge set itself never
-    // re-sorts. This is exactly the 100 TB posture (edges ≫ memory,
-    // node table broadcasts); on a graph whose node table cannot
-    // broadcast, the two semi-joins degrade to shuffles on a/b — same
-    // trajectory, keyed exchanges.
+    // survivors are the d ≥ k nodes, semi-joined back onto the edge set
+    // on both endpoints (degrees judged on the round-start set = the
+    // simultaneous peel). The degree domain is nodes ≪ edges, so the
+    // edge set itself never re-sorts.
     //
     // Each round's edge set and degree table go through LAZY
     // localCheckpoint, not persist: a persisted round still nests every
     // earlier round's subtree in its LOGICAL plan, so the census union's
-    // analysis/canonicalization work grew quadratically in round depth
-    // (~4 s of pure planning at 5 rounds — more than the data), and the
-    // per-round broadcast subtrees would race-recompute the chain.
-    // localCheckpoint(false) plans each round ONCE and replaces its
-    // subtree with the planned RDD; execution stays lazy, storage is the
-    // same MEMORY_AND_DISK the persist used.
+    // analysis/canonicalization work would grow quadratically in round
+    // depth. localCheckpoint(false) plans each round ONCE and replaces
+    // its subtree with the planned RDD; execution stays lazy, storage is
+    // MEMORY_AND_DISK.
     var e: DataFrame = und
     val censuses = (0 to KCoreRounds).map { i =>
       val deg = e.groupBy(col("a")).agg(count(lit(1)).as("d"))
@@ -707,37 +637,26 @@ object Graph {
       if (i < KCoreRounds) {
         // Both endpoint filters are semi-joins against the SAME `keep`
         // subtree (filter+project over the checkpointed deg — do NOT
-        // checkpoint `keep` itself and broadcast it twice: broadcast()
-        // of one bare LogicalRDD used on both sides of a self-join
-        // silently drops the second semi-join on Spark 4.1, probed r21;
-        // the filter+project layer keeps resolution sound).
-        //
-        // r21 default: SHUFFLE-HASH semi-joins. The broadcast shape
-        // launched its 2 build jobs per round AT PLAN-PREPARE time (8
-        // jobs before the main job ever ran — ReusedExchange cannot
-        // collapse them across the LogicalRDD boundary, r15 ledger in
-        // BENCH_NOTES); the shuffle shape has NO prepare-time jobs, so
-        // the whole trajectory (plus the census union) runs as ONE job
-        // whose shuffle stages the scheduler dedups. QBench A/B
-        // min-of-7 at sf0.1: broadcast 0.738 s / 12 jobs → shuffle (see
-        // OPTIMIZATION_r21.md) / 2 jobs. At 100 TB the node-keyed
-        // exchanges are the documented degradation path anyway; on a
+        // checkpoint `keep` itself and join it bare twice: one bare
+        // LogicalRDD used on both sides of a self-join silently drops the
+        // second semi-join on Spark 4.1; the filter+project layer keeps
+        // resolution sound). The semi-joins are SHUFFLE-HASH: a broadcast
+        // build would launch its jobs at plan-prepare time, while the
+        // shuffle shape lets the whole trajectory (plus the census union)
+        // run as ONE job whose shuffle stages the scheduler dedups. On a
         // cluster where the node table broadcasts, AQE's runtime
         // broadcast switch restores the map-side join per round.
-        // SPARK_GRAFT_KCORE_SEMI=broadcast re-measures the r20 arm.
         val keep = deg.filter(col("d") >= lit(k)).select(col("a").as("__keep"))
-        val kcoreBroadcast =
-          sys.env.get("SPARK_GRAFT_KCORE_SEMI").contains("broadcast")
-        def side() = if (kcoreBroadcast) broadcast(keep)
-          else keep.hint("shuffle_hash")
-        e = e.join(side(), col("a") === col("__keep"), "left_semi")
-          .join(side(), col("b") === col("__keep"), "left_semi")
+        e = e.join(keep.hint("shuffle_hash"), col("a") === col("__keep"),
+            "left_semi")
+          .join(keep.hint("shuffle_hash"), col("b") === col("__keep"),
+            "left_semi")
           .localCheckpoint(false)
       }
       census
     }
     // 5-row round trajectory — domain-sized by construction (sortSmall
-    // discipline), r21: the ranged orderBy paid a sampling job.
+    // discipline; a ranged orderBy would pay a sampling job).
     censuses.reduce(_.union(_)).sortSmall(col("round"))
   }
 

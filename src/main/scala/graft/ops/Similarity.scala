@@ -59,18 +59,10 @@ object Similarity {
     // after runs over ≤ 5 rows per query.
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
-    // SPARK_GRAFT_AB_COSINE=window is the BENCH_NOTES control arm: the
-    // pre-r14 full window-sort formulation, kept timeable so the heap
-    // node's win stays a measured number, not a remembered one.
-    if (sys.env.get("SPARK_GRAFT_AB_COSINE").contains("window"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .orderBy(col("query_id"), col("rnk"))
-    else
-      graft.plans.GraftOps.topKPerGroup(scored, Seq("query_id"),
-          Seq(("cos_sim", true), ("vec_id", false)), 5)
-        .withColumn("rnk", row_number().over(w))
-        .orderBy(col("query_id"), col("rnk"))
+    graft.plans.GraftOps.topKPerGroup(scored, Seq("query_id"),
+        Seq(("cos_sim", true), ("vec_id", false)), 5)
+      .withColumn("rnk", row_number().over(w))
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   val cosineTopKSql: String =
@@ -955,50 +947,10 @@ object Similarity {
       element_at(typedLit(cb(m)), col(s"code$m") + 1))
 
 
-  /** Exact ADC top-k per query WITHOUT materializing corpus × queries
-    * (r14, found by the sf100 campaign): the approximate score is a
-    * function of (query, code tuple) alone, so the per-VECTOR rank order
-    * within one query is (code score desc, vec_id) — and that factors.
-    * Per code: member count + the (k+1) smallest member ids (one bounded
-    * heap pass over the code table; +1 absorbs the self-exclusion). Per
-    * query: rank the ≤ k^M score rows, find the tie-safe score threshold
-    * where cumulative member count first reaches k+1 (codes tied at the
-    * crossing are all kept, so arbitrary tie order cannot change the
-    * keep set), and join ONLY the kept (query, code) rows to the member
-    * prefixes. Output volume is queries × (few codes) × (k+1) — linear
-    * in corpus for the code pass and in queries for the rest, vs the
-    * equi-join-to-corpus formulation whose output is corpus × queries
-    * rows (8·10¹⁰ at sf100: the join is cheap per row but the
-    * materialized stream is quadratic BY WORKLOAD since the query set
-    * here scales with the corpus). Classical ADC pays O(corpus·queries)
-    * table LOOKUPS; for top-k the factored plan does strictly less. */
-  private def pqAdcTopK(codes: DataFrame, scores: DataFrame,
-      codeCols: Seq[String], k: Int): DataFrame = {
-    // SPARK_GRAFT_AB_ADC=join is the BENCH_NOTES control arm: the r13
-    // formulation (equi-join scores back to the full code table, rank
-    // corpus × queries rows per query) kept timeable for the A/B table.
-    if (sys.env.get("SPARK_GRAFT_AB_ADC").contains("join")) {
-      val wr = Window.partitionBy(col("query_id"))
-        .orderBy(col("approx_dot").desc, col("vec_id"))
-      return codes.join(scores, codeCols)
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"), col("approx_dot"))
-        .withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= k)
-    }
-    val counts = codes.groupBy(codeCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val members = graft.plans.GraftOps.topKPerGroup(
-      codes, codeCols, Seq(("vec_id", false)), k + 1)
-    pqAdcTopKFrom(scores.join(broadcast(counts), codeCols), members,
-      codeCols, k)
-  }
-
-  /** Factored ADC top-k fed from MEMOIZED census/member index state —
-    * the r19 re-run of the r14 factored-vs-score-join A/B under the r18
-    * memo regime: the per-code census and the member prefixes are PQ
-    * index state (qmod-independent, the same side of the memo line as
-    * the code tables), so the per-rep query cost is the queries×4096
+  /** Factored ADC top-k fed from MEMOIZED census/member index state:
+    * the per-code census and the member prefixes are PQ index state
+    * (qmod-independent, the same side of the memo line as the code
+    * tables), so the per-rep query cost is the queries×4096
     * score broadcast + the threshold window + one member join — the
     * corpus is not scanned at all once the index is built. The memo TAGS
     * are the eval tier's: pqSeeds is prefix-consistent (first-k corpus
@@ -1026,8 +978,26 @@ object Similarity {
       codeCols, k)
   }
 
-  /** [[pqAdcTopK]] with the per-code index state precomputed: `scored`
-    * must carry the per-code member count as `__cnt` (the observed-code
+  /** Exact ADC top-k per query WITHOUT materializing corpus × queries:
+    * the approximate score is a function of (query, code tuple) alone,
+    * so the per-VECTOR rank order within one query is (code score desc,
+    * vec_id) — and that factors.
+    * Per code: member count + the (k+1) smallest member ids (one bounded
+    * heap pass over the code table; +1 absorbs the self-exclusion). Per
+    * query: rank the ≤ k^M score rows, find the tie-safe score threshold
+    * where cumulative member count first reaches k+1 (codes tied at the
+    * crossing are all kept, so arbitrary tie order cannot change the
+    * keep set), and join ONLY the kept (query, code) rows to the member
+    * prefixes. Output volume is queries × (few codes) × (k+1) — linear
+    * in corpus for the code pass and in queries for the rest, vs the
+    * equi-join-to-corpus formulation whose output is corpus × queries
+    * rows (8·10¹⁰ at sf100: the join is cheap per row but the
+    * materialized stream is quadratic BY WORKLOAD since the query set
+    * here scales with the corpus). Classical ADC pays O(corpus·queries)
+    * table LOOKUPS; for top-k the factored plan does strictly less.
+    *
+    * The per-code index state comes in precomputed: `scored` must
+    * carry the per-code member count as `__cnt` (the observed-code
     * census) and `members` the (k+1)-smallest member ids per code. The
     * recall evals feed MEMOIZED census/member frames here (both are
     * query-independent PQ index state, same side of the memo line as the
@@ -1083,14 +1053,7 @@ object Similarity {
     val scores = broadcast(queries).crossJoin(allCodes)
       .withColumn("approx_dot", round(dm(0) + dm(1) + dm(2) + dm(3), 6))
       .select((col("query_id") +: col("approx_dot") +: codeCols.map(col)): _*)
-    // default arm: memoized index state (pqAdcTopKMemo); the two control
-    // arms (score-join, unmemoized factored) stay re-measurable for the
-    // BENCH_NOTES A/B tables
-    val top = if (sys.env.get("SPARK_GRAFT_AB_ADC").exists(
-        v => v == "join" || v == "nomemo"))
-      pqAdcTopK(codes, scores, codeCols, 3)
-    else pqAdcTopKMemo(spark, dir, codes, scores, codeCols, 3)
-    top
+    pqAdcTopKMemo(spark, dir, codes, scores, codeCols, 3)
       .select(col("query_id"), col("vec_id"), col("approx_dot"), col("rnk"))
       .orderBy(col("query_id"), col("rnk"))
   }
@@ -1264,7 +1227,7 @@ object Similarity {
     * costs one signature pass + one cell ranking + three bounded encode
     * projections — not nine independent index builds. */
   def annRecallEval(spark: SparkSession, dir: String): DataFrame =
-    annRecallEvalImpl(spark, dir, 50L)
+    annRecallEvalImpl(spark, dir, 50L, fusedPq = true)
 
   /** [[annRecallEval]] with the exact-truth tier restricted to a
     * hash-stable 1-in-1000 query sample (`vec_id % 1000 = 0` — the
@@ -1277,15 +1240,11 @@ object Similarity {
     * where the all-queries truth (and its DuckDB twin) are intractable —
     * the sf10+ scale-evidence variant the full-tier eval cannot give. */
   def annRecallSampled(spark: SparkSession, dir: String): DataFrame =
-    annRecallEvalImpl(spark, dir, 1000L)
+    annRecallEvalImpl(spark, dir, 1000L, fusedPq = true)
 
-  private def annRecallEvalImpl(spark: SparkSession, dir: String,
-      qmod: Long): DataFrame =
-    annRecallEvalImpl(spark, dir, qmod,
-      !sys.env.get("SPARK_GRAFT_PQ_FUSED").contains("off"))
-
-  /** Test seam: `fusedPq` selects the PQ-family arm explicitly so the
-    * knob-arm parity pin can compare both in one JVM. */
+  /** Test seam: the production paths take the fused PQ-family arm;
+    * `fusedPq = false` builds the unfused per-k shape that
+    * AnnRecallEvalSpec's parity pin uses as its reference. */
   private[ops] def annRecallEvalImpl(spark: SparkSession, dir: String,
       qmod: Long, fusedPq: Boolean): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -1392,14 +1351,9 @@ object Similarity {
       else df.sortSmall(col("method"), col("param"))
 
     // ---- PQ family: one seed collect at max k; codebook k = row prefix.
-    // The r11 A/B left the per-k chains UNFUSED (3.6 → 4.4 s then:
-    // every fused stage was resource-bound and serialization lost).
-    // r18 re-ran the A/B after the census/member memoization (the frames
-    // the fused chain re-reads are now checkpoint-borne, so the fused
-    // stages are floor-bound, not resource-bound) — see BENCH_NOTES r18
-    // for the adoption decision; SPARK_GRAFT_PQ_FUSED re-measures the
-    // losing arm. Both arms share the same memoized index state and are
-    // value-identical (oracle-checked under both knob settings).
+    // The fused tail re-reads checkpoint-borne census/member frames, so
+    // its stages are floor-bound, not resource-bound. Both arms share
+    // the same memoized index state and are value-identical.
     val seeds = IndexMemo.value(spark, dir, s"pq_seeds:${PqEvalKs.max}") {
       pqSeeds(em, PqEvalKs.max)
     }
@@ -1430,10 +1384,7 @@ object Similarity {
       // scoring table's row domain + the factored top-k's member
       // prefixes, both qmod-independent) — memoized like the code table
       // they derive from, so the per-rep sweep re-runs neither the
-      // census aggregate nor the member heap pass (r18: previously only
-      // the count-less distinct was memoized and pqAdcTopK re-aggregated
-      // counts + members per rep, one census shuffle + one heap shuffle
-      // + two broadcast jobs per k per rep)
+      // census aggregate nor the member heap pass
       val counts = IndexMemo.df(spark, dir, s"pq_counts:$k") {
         codes.groupBy(codeCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
       }
@@ -1445,7 +1396,7 @@ object Similarity {
       (k, cb, counts, members)
     }
     if (fusedPq) {
-      // ---- fused tail (adopted r18): ALL NINE operating points settle in
+      // ---- fused tail: ALL NINE operating points settle in
       // one tagged recall join + one tagged cost union. Candidates
       // normalize to (method, param, query_id, vec_id) — lsh/ivf pairs
       // are unique per key by construction (one bucket per (param, vec),
@@ -1487,9 +1438,9 @@ object Similarity {
         .select(col("method"), col("param"), col("n_exact"), col("n_hits"),
           expr("n_hits * 1000000 div n_exact").as("recall_fp"), col("cost")))
     } else {
-      // ---- unfused control arm (the r11 shape, re-measurable behind
-      // SPARK_GRAFT_PQ_FUSED=off): per-family recall joins + per-k PQ
-      // subtrees, value-identical by AnnRecallEvalSpec's parity pin.
+      // ---- unfused reference arm (test seam only): per-family recall
+      // joins + per-k PQ subtrees, value-identical by AnnRecallEvalSpec's
+      // parity pin.
       val lsh = exactTop.select(col("query_id"), col("vec_id"),
           explodeParams(lshParams))
         .join(lshCand, Seq("param", "query_id", "vec_id"), "left_outer")

@@ -292,6 +292,11 @@ package object ops {
       extraAggs: Seq[(Column, String)]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val allOuts = (gridSpecs ++ contSpecs).map(_._3)
+    val extNames = extraAggs.map(_._2)
+    require(extNames.distinct.size == extNames.size &&
+        extNames.forall(n => !allOuts.contains(n)),
+      s"extraAggs names ${extNames.mkString(", ")} must be unique and " +
+        s"disjoint from the percentile outputs ${allOuts.mkString(", ")}")
     val wBelow = Window.partitionBy(col(group), col("__vn")).orderBy(col("__k"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(col(group), col("__vn"))
@@ -375,7 +380,6 @@ package object ops {
         val extAggCols = extraAggs.map { case (c, n) => c.as(n) }
         Seq(df.groupBy(col(group)).agg(extAggCols.head, extAggCols.tail: _*))
       }
-    val extNames = extraAggs.map(_._2)
     val extTypes: Map[String, org.apache.spark.sql.types.DataType] =
       extChains.headOption
         .map(_.schema.fields.map(f => f.name -> f.dataType).toMap)

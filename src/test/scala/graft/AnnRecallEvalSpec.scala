@@ -49,9 +49,8 @@ class AnnRecallEvalSpec extends AnyFunSuite {
   }
 
   test("fused and unfused PQ-family arms are value-identical (r18 adoption pin)") {
-    // the r18 A/B adopted the tagged one-dataflow PQ sweep; the unfused
-    // per-k arm stays re-measurable behind SPARK_GRAFT_PQ_FUSED=off and
-    // must never drift from the adopted default
+    // the production paths run the tagged one-dataflow PQ sweep; the
+    // unfused per-k shape is its reference and must never drift from it
     val fused = Similarity.annRecallEvalImpl(spark, dir, 50L, fusedPq = true)
     val unfused = Similarity.annRecallEvalImpl(spark, dir, 50L, fusedPq = false)
     assert(fused.exceptAll(unfused).isEmpty && unfused.exceptAll(fused).isEmpty,

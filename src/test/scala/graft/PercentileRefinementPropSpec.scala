@@ -128,4 +128,15 @@ class PercentileRefinementPropSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("gridBucketPercentilesWith rejects an extra aggregate named like a percentile output") {
+    import spark.implicits._
+    val df = Seq(("a", 1.0), ("a", 2.0)).toDF("g", "v")
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.gridBucketPercentilesWith(df, "g",
+        gridSpecs = Seq(("v", 0.5, "p50")), contSpecs = Nil,
+        extraAggs = Seq((count(lit(1)), "p50")))
+    }
+    assert(e.getMessage.contains("must be unique and disjoint"))
+  }
 }

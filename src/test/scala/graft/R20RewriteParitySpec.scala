@@ -34,10 +34,14 @@ class R20RewriteParitySpec extends AnyFunSuite {
   }
 
   test("link-prediction wedge arms agree (array expansion vs self-join)") {
+    // the pre-r20 plan, verbatim: adj ⋈ adj on the shared node, keep the
+    // l.b < r.b half, count common neighbors per (u, v)
     val adj = Graph.cappedAdjacency(spark, dir)
-    assertSame(
-      Graph.lpWedges(adj, useJoin = false),
-      Graph.lpWedges(adj, useJoin = true))
+    val legacy = adj.as("l").join(adj.as("r"), col("l.a") === col("r.a"))
+      .filter(col("l.b") < col("r.b"))
+      .groupBy(col("l.b").as("u"), col("r.b").as("v"))
+      .agg(count(lit(1)).as("common_neighbors"))
+    assertSame(Graph.lpWedges(adj), legacy)
   }
 
   test("golden-parity count-join diff equals exceptAll multiset counts") {
@@ -45,8 +49,7 @@ class R20RewriteParitySpec extends AnyFunSuite {
     // REAL fingerprint frames, both directions, including an injected
     // asymmetry so the zero-diff fixture cannot make the test vacuous
     val golden = spark.read.parquet(
-      sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference") +
-        "/02.parquet")
+      graft.features.GoldenParity.refFile("02.parquet"))
     val gcols = golden.columns.toSeq
     val fpAll = golden.select(xxhash64(gcols.map(col): _*).as("h"))
     // asymmetric sides: drop a distinct-valued slice from one, duplicate

@@ -13,6 +13,9 @@
 #     collects are the #1 scale anti-pattern
 #  5. every oracle SQL ends with an ORDER BY (total output order is the
 #     cross-engine hash-compare contract)
+#  6. ops/ reads no environment variable outside a short allow-list: a
+#     query's plan shape is not chosen by a flag (the allow-listed reads
+#     are two open A/B arms and the scale-check slice modulus)
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -33,22 +36,29 @@ fi
 #    scale-campaign tool mains, whose one-JSON-line-per-result stdout IS
 #    their artifact interface)
 if grep -rn 'println' src/main/scala/graft --include='*.scala' \
-    | grep -vE 'Bench\.scala|Verify\.scala|GreenTaxiPipeline\.scala|Ingest\.scala|ScaleGen\.scala|ScaleCheck\.scala|ScaleSample\.scala|StreamScale\.scala|DedupProfile\.scala'; then
+    | grep -vE 'Bench\.scala|Verify\.scala|GreenTaxiPipeline\.scala|Ingest\.scala|ScaleGen\.scala|ScaleCheck\.scala|ScaleSample\.scala|StreamScale\.scala'; then
   say "FAIL: println in library code"; fail=1
 fi
 
 # 4. driver-side collects in the operator inventory. Excluded files:
 #    Similarity.scala (budgeted below), ScaleChecks.scala (scale
 #    VERIFICATION tool — its collects are dump-/trajectory-bounded, never
-#    in a query hot path), DedupProfile.scala (profiling tool, bounded
-#    curve output).
+#    in a query hot path).
 if grep -rn '\.collect()' src/main/scala/graft/ops --include='*.scala' \
-    | grep -vE 'Similarity\.scala|ScaleChecks\.scala|DedupProfile\.scala'; then
+    | grep -vE 'Similarity\.scala|ScaleChecks\.scala'; then
   say "FAIL: unfenced .collect() in ops/"; fail=1
 fi
 n_sim=$(grep -c '\.collect()' src/main/scala/graft/ops/Similarity.scala)
 if [ "$n_sim" -gt 5 ]; then
   say "FAIL: Similarity.scala grew a sixth .collect() (fenced budget is 5: two Lloyd trainers x (seed + per-round k*dim centroid rows) + the PQ codebook seed - all constant-size quantizer state)"; fail=1
+fi
+
+# 6. env reads in ops/: every sys.env access must name an allow-listed
+#    variable on the same line
+if grep -rn 'sys\.env' src/main/scala/graft/ops --include='*.scala' \
+    | grep -vE '^[^:]+:[0-9]+:\s*(//|\*)' \
+    | grep -vE 'sys\.env\.get\("SPARK_GRAFT_(AB_AQ|AB_EVAL_FINAL|SLICE_MOD)"\)'; then
+  say "FAIL: sys.env read in ops/ outside the allow-list (SPARK_GRAFT_AB_AQ, SPARK_GRAFT_AB_EVAL_FINAL, SPARK_GRAFT_SLICE_MOD)"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
