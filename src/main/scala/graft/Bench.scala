@@ -86,8 +86,7 @@ object Bench {
     }
     done.await()
     val wall = (System.nanoTime() - t0) / 1e9
-    try spark.sharedState.cacheManager.clearCache()
-    catch { case _: Throwable => () }
+    spark.catalog.clearCache()
     (wall, errors.get())
   }
 
@@ -109,7 +108,7 @@ object Bench {
     * Tables.events so the µs-NTZ normalization is baked in once. */
   private[graft] def relayout(spark: SparkSession, sfDir: String): String = {
     if (sys.env.getOrElse("SPARK_GRAFT_RELAYOUT", "1") == "0") return sfDir
-    val base = LocalScratch.dir()
+    val base = GraftSession.scratchDir()
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val out = s"$base/relayout-${new java.io.File(sfDir).getName}"
     val done = new java.io.File(s"$out/_DONE")
@@ -136,86 +135,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir0 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "8").toInt
     val load0 = loadavg()
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      // Reduce-side width sized to DATA VOLUME, not core count: sf0.1
-      // shuffles are sub-100 MB, so cpus/4 partitions keep every reduce
-      // task meaningfully sized while quartering per-wave scheduling
-      // overhead — measured 43.4 s vs 48.0 s over the full suite
-      // (interleaved A/B, biggest wins in the multi-wave LSH queries).
-      // CPU-heavy stages are unaffected: they pin their own width with
-      // explicit repartition(defaultParallelism) calls. This is the same
-      // sizing AQE's partition coalescing computes at scale from runtime
-      // stats; with AQE off in this regime the constant is set directly.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(8, cpus.toInt / 4).toString))
-      // Whole-stage-codegen COMPILE cache, sized to the suite. The
-      // default (100 entries) holds ~4 queries' worth of generated
-      // classes, so a 184-query suite evicts everything between reps and
-      // re-pays janino compilation on EVERY execution of every plan —
-      // measured 2× on the power total (25.3 → 12.3 s over the 11
-      // heaviest queries; sim_ann_recall_eval alone 3.96 → 1.71 s).
-      // ~25 classes/query × 184 queries ≈ 4.6k entries; 8192 covers it
-      // with headroom. The same knob matters on real executors: any
-      // service running hundreds of distinct plan shapes (a query
-      // endpoint, a multi-tenant ETL) thrashes the same cache at its
-      // default size.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", "false")
-      // the per-query job counts (jobsFor) are read from the status store
-      // AFTER all passes; the 1000-job default retention would evict the
-      // early groups under a ~5k-job suite (a few MB of driver memory
-      // buys exact attribution)
-      .config("spark.ui.retainedJobs", "100000")
-      // Pin the session timezone like Verify does: queries that bin naive
-      // timestamps (e.g. join_interval_binned's hour bucket) must not
-      // drift with the host TZ across DST transitions.
-      .config("spark.sql.session.timeZone", "UTC")
-      // WindowExec/SMJ row buffers switch from an in-memory array to a
-      // spilling UnsafeExternalSorter at 4096 rows by DEFAULT — at sf0.1
-      // a 3-group percentile window buffers 200k-row groups, so every
-      // big-partition window paid serialize+spill for rows that fit in a
-      // few MB (measured 0.86 → 0.72 s on one window pass; compounds
-      // across the window-heavy tier). 1M rows ≈ ≤50 MB per group
-      // buffer — sized to sf0.1 against the 24g heap. At cluster scale
-      // this stays data-dependent tuning: partitions there hold far more
-      // rows per group, and the spill path is exactly what makes the
-      // operator memory-safe, so the default is only raised, not removed.
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sessionWindow.buffer.in.memory.threshold", "1048576")
-      // Let AQE coalesce stages downstream of persisted intermediates
-      // (see Verify.scala for rationale + measurement).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE OFF for the local benchmark regime (env-overridable): at
-      // sf0.1/local[32] every shuffle is already explicitly sized
-      // (partitions=32, broadcasts hinted, repartition counts pinned), so
-      // AQE's runtime re-planning has nothing to improve and its
-      // per-stage materialization barriers cost ~15% wall-clock
-      // (interleaved A/B over all 98 queries: 36.5 s off vs 42.5 s on).
-      // At real scale AQE earns its latency (skew splits, runtime
-      // broadcast switches, partition coalescing over unknown data) and
-      // should be ON — the correctness gate (Verify) runs with it on, and
-      // SkewJoinSpec pins the skew-split behavior explicitly.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // Scan-split size (env-overridable A/B knob): the sf0.1 tables are
-      // single small parquet files, so with the 128 MiB default every
-      // scan is ONE task regardless of cores.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "134217728"))
-      // Compression confs stay at Spark defaults (ON): measured A/B
-      // (2× interleaved full-bench runs, JVM-per-arm) put
-      // shuffle/broadcast/cache compression OFF at ~45.0 s vs ~42.7 s
-      // with defaults — LZ4 is cheaper than the extra bytes even on
-      // local disk, so there is no local-mode exception to take.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forQueries()
     // normalize the physical input layout BEFORE anything timed (scaladoc
     // above); the reporting fields keep the ORIGINAL dir/sf names
     val sfDir = relayout(spark, sfDir0)
@@ -243,21 +165,8 @@ object Bench {
         // swallow a PARQUET_TYPE_ILLEGAL and leave queries unwarmed.
         Tables.preTouch(spark, warmDir)
         concurrentPass(spark, warmDir, streams, warm = true)
-        // Post-warm-up quiesce (env-gated A/B knob): the 8-stream warm-up
-        // leaves async debt (context-cleaner queue, listener backlog,
-        // GC-pending broadcasts/shuffles) that lands on whichever queries
-        // run first in the power pass.
-        // .toIntOption (not .toInt inside the warm-up catch): a typo'd
-        // value must complain loudly, not silently disable the A/B knob.
-        sys.env.get("SPARK_GRAFT_QUIESCE_SEC").foreach { v =>
-          v.toIntOption match {
-            case Some(s) => System.gc(); Thread.sleep(s * 1000L); System.gc()
-            case None => System.err.println(
-              s"[bench] ignoring malformed SPARK_GRAFT_QUIESCE_SEC='$v'")
-          }
-        }
       }
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => System.err.println(s"[bench] warm-up: $e") }
     // A failed query must NOT masquerade as a timing: it is recorded as
     // -1 in the side file, excluded from the total, and surfaced in the
     // stdout line's "errors" count.
@@ -282,8 +191,7 @@ object Bench {
       // them registered for the whole session: clearing after each query
       // bounds memory and times every query independently (no cross-query
       // cache luck from an earlier alphabetical neighbor).
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
+      spark.catalog.clearCache()
       if (ok) dt else -1.0
     }
     // TWO full power passes, per-query MIN — the identical basis to the
@@ -545,8 +453,8 @@ object Bench {
       try {
         val keyed =
           if (sidePath.endsWith(".json"))
-            sidePath.stripSuffix(".json") + s"_c$cpus.json"
-          else sidePath + s"_c$cpus"
+            sidePath.stripSuffix(".json") + s"_c${GraftSession.cpus}.json"
+          else sidePath + s"_c${GraftSession.cpus}"
         val w2 = new java.io.PrintWriter(keyed)
         try w2.println(sideLine) finally w2.close()
       } catch { case _: Throwable => () }

@@ -54,13 +54,8 @@ object GreenTaxiPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GreenTaxiPipeline <raw.csv> <outDir> [--fixed-dow]")
     val Array(csvPath, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("green-taxi-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      master = sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.cpus}]"))
     try {
       val src =
         if (csvPath.startsWith("http://") || csvPath.startsWith("https://"))

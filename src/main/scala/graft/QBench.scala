@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query A/B timing harness (dev tool, not a driver artifact):
   * `runMain graft.QBench q1,q2,... [reps]` times each named query
@@ -14,30 +13,9 @@ object QBench {
       .getOrElse(Seq("dedup_banding_recall_eval"))
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(8, cpus.toInt / 4).toString))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Suite-sized codegen compile cache — mirror Bench (measurement
-      // documented there); QBench must time the same regime.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // mirror Bench's big-partition window/SMJ buffer sizing
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sessionWindow.buffer.in.memory.threshold", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forQueries()
     def clear(): Unit = {
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
+      spark.catalog.clearCache()
       // Control knob for the graph-index memo protocol (BENCH_NOTES
       // control table): with SPARK_GRAFT_GRAPH_MEMO=off the memoized
       // co-occurrence-edge / LPA-label pipelines are dropped between

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runner for [[graft.ops.ScaleChecks]] — engine-side proofs and
   * slice-equality checks over a `graft.Verify` dump at an
   * oracle-frontier SF. One JSON line per check on stdout plus a summary;
@@ -15,16 +13,8 @@ object ScaleCheck {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Map(
+      "spark.sql.shuffle.partitions" -> GraftSession.cpus.toString))
     var failures = 0
     var ran = 0
     graft.ops.ScaleChecks.all
@@ -43,8 +33,7 @@ object ScaleCheck {
             Option(e.getMessage).getOrElse("").replaceAll("[\"\\\\\n\r\t]", " ").take(160)}"}"""
         }
         println(line)
-        try spark.sharedState.cacheManager.clearCache()
-        catch { case _: Throwable => () }
+        spark.catalog.clearCache()
       }
     println(s"""{"summary":{"ran":$ran,"failures":$failures,"sf_dir":"$sfDir"}}""")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-proof data generator (VERDICT r10 item 4): tiles the driver's
@@ -64,17 +64,7 @@ object ScaleGen {
     // edges, events and embeddings are IDENTICAL to legacy mode (the
     // relational/ANN tiers see the same data either way).
     val famW = args.lift(3).map(_.toInt).getOrElse(0)
-    // LocalScratch (RAM-backed spark.local.dir) like every other main:
-    // the xf=1000 lineitem repartition spills ~tens of GB of shuffle map
-    // output, which on this box's quota'd disk is the difference between
-    // finishing and ENOSPC-ing two tables from the end (r16).
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Map("spark.sql.shuffle.partitions" -> "32"))
 
     // one shared stride per key DOMAIN, so FK sides shift identically
     def maxOf(t: String, c: String): Long =

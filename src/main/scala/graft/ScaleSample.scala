@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic slice generator for the ORACLE-FRONTIER scale checks:
@@ -26,13 +25,7 @@ object ScaleSample {
     val src = args.lift(0).getOrElse("target/scale/sf10")
     val out = args.lift(1).getOrElse("target/scale/sf10s")
     val mod = args.lift(2).map(_.toLong).getOrElse(20L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Map("spark.sql.shuffle.partitions" -> "32"))
     def write(name: String, key: String, keepPrefix: Long = 0L): Unit = {
       val df = Tables.table(spark, src, name)
         .filter(pmod(col(key), lit(mod)) === 0 || col(key) < keepPrefix)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -26,14 +26,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/scale/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Map("spark.sql.shuffle.partitions" -> "32"))
     graft.functions.GraftFunctions.register(spark)
 
     val scratch = java.nio.file.Files.createTempDirectory("stream_scale")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,31 +10,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalScratch(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Suite-sized codegen compile cache (see Bench.scala for the
-      // measurement): 184 distinct plans thrash the 100-entry default.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // The LSH queries persist small intermediates; by default AQE must
-      // preserve a cached plan's output partitioning, so every stage
-      // downstream of a cache runs at full shuffle parallelism even when
-      // the cached data is tiny. Letting AQE re-partition cached plans
-      // coalesces those stages (measured 3.7 s → 2.4 s on dedup_minhash_lsh
-      // at sf0.1; same flag a production deployment would set).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // mirror Bench's big-partition window/SMJ buffer sizing (see
-      // Bench.scala — the 4096-row default spills every sizable window
-      // group through UnsafeExternalSorter)
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1048576")
-      .config("spark.sql.sessionWindow.buffer.in.memory.threshold", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the regime Bench times, so the checked plans are the timed plans
+    val spark = GraftSession.forQueries()
     new java.io.File(outDir).mkdirs()
     // Optional per-query wall clamp for the SCALE campaigns: at sf10 the
     // two deliberate exact tiers (brute-force cosine, all-pairs shingle
@@ -119,8 +95,7 @@ object Verify {
       }
       // drop any persist()ed intermediates so 75 queries don't accumulate
       // cached tables for the whole session
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
+      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{LocalScratch, Tables}
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -64,12 +64,12 @@ object Sources {
     * round-trip harnesses; on a cluster the same pipelines would point at
     * a shared warehouse/scratch URI instead. */
   private lazy val scratchRoot: java.nio.file.Path = {
-    // Rooted at LocalScratch (RAM-backed /dev/shm when present) for the
-    // same reason spark.local.dir is: the roundtrip sinks' cost should
-    // be the engine's write/read path, not the host disk's 8×-variance
-    // fdatasync weather (BENCH_NOTES §Round 11). Falls back to
-    // java.io.tmpdir when no RAM scratch exists.
-    val base = LocalScratch.dir()
+    // Rooted at GraftSession.scratchDir (RAM-backed /dev/shm when
+    // present) for the same reason spark.local.dir is: the roundtrip
+    // sinks' cost should be the engine's write/read path, not the host
+    // disk's 8×-variance fdatasync weather (BENCH_NOTES §Round 11).
+    // Falls back to java.io.tmpdir when no RAM scratch exists.
+    val base = GraftSession.scratchDir()
       .map(d => java.nio.file.Paths.get(d))
       .getOrElse(java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir")))

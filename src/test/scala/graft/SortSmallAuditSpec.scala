@@ -27,8 +27,8 @@ class SortSmallAuditSpec extends AnyFunSuite
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  // Audit the AQE-OFF plan — the bench regime (Bench.scala pins
-  // adaptive off locally), and the only way the structural walk sees
+  // Audit the AQE-OFF plan — the query regime (GraftSession.queryConf
+  // pins adaptive off), and the only way the structural walk sees
   // the exchanges: under AQE the root is an AdaptiveSparkPlanExec whose
   // collect() does not descend into the lazily-staged inner plan.
   // Forked test JVM runs suites sequentially, so the flip cannot bleed

@@ -25,17 +25,11 @@ object TestSpark {
     d.toString
   }
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** AQE stays on here (Spark's default): SkewJoinSpec and
+    * TopKPerGroupSpec read adaptive plans. */
+  lazy val spark: SparkSession = GraftSession(Map(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString),
+    master = "local[4]")
 }

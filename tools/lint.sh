@@ -16,6 +16,8 @@
 #  6. ops/ reads no environment variable outside a short allow-list: a
 #     query's plan shape is not chosen by a flag (the allow-listed reads
 #     are two open A/B arms and the scale-check slice modulus)
+#  7. SparkSession.builder appears under src/ only in GraftSession.scala:
+#     every session, tests included, starts from its one base
 set -u
 cd "$(dirname "$0")/.."
 fail=0
@@ -59,6 +61,12 @@ if grep -rn 'sys\.env' src/main/scala/graft/ops --include='*.scala' \
     | grep -vE '^[^:]+:[0-9]+:\s*(//|\*)' \
     | grep -vE 'sys\.env\.get\("SPARK_GRAFT_(AB_AQ|AB_EVAL_FINAL|SLICE_MOD)"\)'; then
   say "FAIL: sys.env read in ops/ outside the allow-list (SPARK_GRAFT_AB_AQ, SPARK_GRAFT_AB_EVAL_FINAL, SPARK_GRAFT_SLICE_MOD)"; fail=1
+fi
+
+# 7. one session factory
+if grep -rn 'SparkSession\.builder' src --include='*.scala' \
+    | grep -v '^src/main/scala/graft/GraftSession\.scala:'; then
+  say "FAIL: SparkSession.builder outside src/main/scala/graft/GraftSession.scala"; fail=1
 fi
 
 if [ "$fail" -eq 0 ]; then say "OK"; fi
